@@ -213,6 +213,17 @@ def cmd_delete(args) -> int:
     return 0
 
 
+def linkrank_bucket_table(out: str) -> str:
+    """Per-output bucketed edge-table name for ``linkrank``: two runs that
+    share a warehouse but write different ``--out`` paths never drop or
+    overwrite each other's edge table mid-iteration."""
+    import hashlib
+    import os
+
+    digest = hashlib.sha1(os.path.abspath(out).encode()).hexdigest()[:12]
+    return f"_cli_linkrank_edges_{digest}"
+
+
 def cmd_linkrank(args) -> int:
     """Link-graph signals over a pages table: F5 outlinks → fixed-iteration
     damped PageRank per url (plans/graph.py:pagerank, bucketed edge table)
@@ -240,7 +251,7 @@ def cmd_linkrank(args) -> int:
         nodes=pages.select("url"),
         iterations=args.iterations,
         damping=args.damping,
-        bucket_table="_cli_linkrank_edges",
+        bucket_table=linkrank_bucket_table(args.out),
         n_buckets=args.partitions,
         weight=weight,
     ).select(F.col("node").alias("url"), "pr")

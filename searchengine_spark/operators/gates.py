@@ -22,7 +22,7 @@ corpus) makes the broadcast a driver/executor OOM. The gate:
    underestimates (both original sites learned this independently).
 
 The one gate with a different oversized arm — WandSearchEngine's
-``docs_join`` (plans/wand.py), whose past-ceiling strategy is the direct
+phase-2 join gate (plans/wand.py), whose past-ceiling strategy is the direct
 pyarrow row-group probe rather than a shuffle join, and whose bound is
 arithmetic (k·groups·|batch|), not a count job — intentionally does NOT
 route through this helper; its docstring cross-references this contract.

@@ -119,15 +119,8 @@ def merge_block_segments(
             passthrough = None
         for (shard, term), g in pdf.groupby(["shard", "term"], sort=False):
             parts = [codec.decode_postings(r.gaps, r.tfs, r.dls) for r in g.itertuples()]
-            # carry the boost-bound flag stream through the re-encode; a
-            # source block without one (pre-flag segment) contributes the
-            # UNKNOWN sentinel per posting, never fabricated zeros
-            flags = [
-                codec.varint_decode(r.fls).astype(np.int64)
-                if len(getattr(r, "fls", b"")) > 0
-                else np.full(p[0].size, shards_mod.FLAG_UNKNOWN, dtype=np.int64)
-                for r, p in zip(g.itertuples(), parts)
-            ]
+            # carry the boost-bound flag stream through the re-encode
+            flags = [codec.varint_decode(r.fls).astype(np.int64) for r in g.itertuples()]
             cols = {
                 "shard": int(shard),
                 "term": term,
@@ -211,26 +204,25 @@ def apply_tombstones(
     never a whole head-term posting list); the kill set is replicated
     across a shard's buckets (TERM_BUCKETS small int rows per tombstone).
 
-    **Selective rewrite** (indexes carrying the avgdl-free (max_tf, min_dl)
-    block bounds): only blocks whose docnos intersect the kill set are
-    decoded and re-encoded — every other block passes through with its
-    posting streams BYTE-IDENTICAL (property-tested), paying a searchsorted
-    range check and, for range-overlapping blocks, one gaps decode. A
-    100-doc takedown on a 10^12-doc index therefore rewrites ~100 blocks,
-    not the index. Corpus-level stats still change everywhere — ``N`` and
-    ``avgdl`` are recomputed exactly and idf re-derives from the updated
-    per-block ``n`` — and that is still EXACT for queries because the only
-    per-block field that depends on avgdl is the WAND *upper bound*:
-    pass-through blocks get ``max_partial`` refreshed arithmetically to
-    partial(max_tf, min_dl, new avgdl) (a sound, slightly looser bound —
-    monotonicity in tf and dl), rewritten blocks get the exact block max.
-    Scoring never reads ``max_partial``, so querying the compacted index is
-    rank- and score-identical to a fresh build of the surviving corpus
-    (property-tested). Pre-bounds layouts fall back to the full
-    decode-and-re-encode of every block (round-2 behavior). Surviving
-    docnos keep their values — scores never depend on docno, and holes in
-    the docno space are fine (shard membership is unchanged, so
-    doc-disjointness and the per-shard top-k merge argument still hold).
+    **Selective rewrite** (enabled by the avgdl-free (max_tf, min_dl)
+    bounds every block carries): only blocks whose docnos intersect the
+    kill set are decoded and re-encoded — every other block passes through
+    with its posting streams BYTE-IDENTICAL (property-tested), paying a
+    searchsorted range check and, for range-overlapping blocks, one gaps
+    decode. A 100-doc takedown on a 10^12-doc index therefore rewrites
+    ~100 blocks, not the index. Corpus-level stats still change everywhere
+    — ``N`` and ``avgdl`` are recomputed exactly and idf re-derives from
+    the updated per-block ``n`` — and that is still EXACT for queries
+    because the only per-block field that depends on avgdl is the WAND
+    *upper bound*: pass-through blocks get ``max_partial`` refreshed
+    arithmetically to partial(max_tf, min_dl, new avgdl) (a sound, slightly
+    looser bound — monotonicity in tf and dl), rewritten blocks get the
+    exact block max. Scoring never reads ``max_partial``, so querying the
+    compacted index is rank- and score-identical to a fresh build of the
+    surviving corpus (property-tested). Surviving docnos keep their values
+    — scores never depend on docno, and holes in the docno space are fine
+    (shard membership is unchanged, so doc-disjointness and the per-shard
+    top-k merge argument still hold).
 
     For delete visibility WITHOUT any rewrite (O(tombstones) takedowns),
     see :mod:`searchengine_spark.operators.tombstones` — the query-time
@@ -251,13 +243,7 @@ def apply_tombstones(
 
     if block_size is None:
         block_size = index.block_size
-    if "doc_len" not in index.docs.columns:
-        raise ValueError(
-            "apply_tombstones needs doc_len in docs_sharded (pre-doc_len "
-            "layout: export + rebuild the index first, see shards.export_index)"
-        )
     with_positions = index.with_positions
-    selective = bool(getattr(index, "has_block_bounds", False))
     tomb_ids = tombstones.select("doc_id").distinct()
     docs2 = index.docs.join(tomb_ids, "doc_id", "left_anti")
     st = docs2.agg(
@@ -330,56 +316,44 @@ def apply_tombstones(
         # check (sorted kill + searchsorted on block min/max) clears most
         # blocks without touching bytes; only range-overlapping blocks pay
         # a gaps decode for the precise membership test.
-        if selective and len(bpdf):
-            touched = np.zeros(len(bpdf), dtype=bool)
-            if kill.size:
-                lo = bpdf["min_docno"].to_numpy(dtype=np.int64)
-                hi = bpdf["max_docno"].to_numpy(dtype=np.int64)
-                i = np.searchsorted(kill, lo)
-                in_range = i < kill.size
-                nxt = kill[np.minimum(i, kill.size - 1)]
-                in_range &= nxt <= hi
-                gaps_col = bpdf.columns.get_loc("gaps")
-                for j in np.flatnonzero(in_range):
-                    d = np.cumsum(
-                        codec.varint_decode(bpdf.iat[j, gaps_col]), dtype=np.uint64
-                    ).astype(np.int64)
-                    touched[j] = bool(np.isin(d, kill).any())
-            clean = bpdf[~touched].copy()
-            # run id: dirty blocks of a term separated by a clean block must
-            # re-encode independently — pooling them would let a rewritten
-            # block span the clean block's docno range, breaking the
-            # same-term non-overlap invariant the WAND kernel's searchsorted
-            # pruning relies on. A global clean-count works as the run key:
-            # a term's rows are contiguous (sorted above), so the count only
-            # advances between two of its dirty rows when one of ITS clean
-            # blocks sits between them.
-            dirty = bpdf[touched].assign(_crun=np.cumsum(~touched)[touched])
-            if len(clean):
-                # refresh the avgdl-baked WAND bound arithmetically from the
-                # avgdl-free (max_tf, min_dl) metadata: a sound (if slightly
-                # looser) upper bound under the NEW avgdl — monotone in tf,
-                # antitone in dl — with no decode and no re-encode
-                mt = clean["max_tf"].to_numpy(dtype=np.float64)
-                md = clean["min_dl"].to_numpy(dtype=np.float64)
-                clean["max_partial"] = config.bm25_partial(mt, md, avgdl2)
-        else:
-            # pre-bounds layout: max_partial bakes the OLD avgdl and cannot
-            # be refreshed without a decode, so every block re-encodes
-            # (round-2 behavior) even in shards with no tombstones
-            clean = bpdf.iloc[0:0]
-            dirty = bpdf.assign(_crun=0)
+        touched = np.zeros(len(bpdf), dtype=bool)
+        if kill.size:
+            lo = bpdf["min_docno"].to_numpy(dtype=np.int64)
+            hi = bpdf["max_docno"].to_numpy(dtype=np.int64)
+            i = np.searchsorted(kill, lo)
+            in_range = i < kill.size
+            nxt = kill[np.minimum(i, kill.size - 1)]
+            in_range &= nxt <= hi
+            gaps_col = bpdf.columns.get_loc("gaps")
+            for j in np.flatnonzero(in_range):
+                d = np.cumsum(
+                    codec.varint_decode(bpdf.iat[j, gaps_col]), dtype=np.uint64
+                ).astype(np.int64)
+                touched[j] = bool(np.isin(d, kill).any())
+        clean = bpdf[~touched].copy()
+        # run id: dirty blocks of a term separated by a clean block must
+        # re-encode independently — pooling them would let a rewritten
+        # block span the clean block's docno range, breaking the
+        # same-term non-overlap invariant the WAND kernel's searchsorted
+        # pruning relies on. A global clean-count works as the run key:
+        # a term's rows are contiguous (sorted above), so the count only
+        # advances between two of its dirty rows when one of ITS clean
+        # blocks sits between them.
+        dirty = bpdf[touched].assign(_crun=np.cumsum(~touched)[touched])
+        if len(clean):
+            # refresh the avgdl-baked WAND bound arithmetically from the
+            # avgdl-free (max_tf, min_dl) metadata: a sound (if slightly
+            # looser) upper bound under the NEW avgdl — monotone in tf,
+            # antitone in dl — with no decode and no re-encode
+            mt = clean["max_tf"].to_numpy(dtype=np.float64)
+            md = clean["min_dl"].to_numpy(dtype=np.float64)
+            clean["max_partial"] = config.bm25_partial(mt, md, avgdl2)
 
         for (shard, term, run), g in dirty.groupby(
             ["shard", "term", "_crun"], sort=False
         ):
             parts = [codec.decode_postings(r.gaps, r.tfs, r.dls) for r in g.itertuples()]
-            flags = [
-                codec.varint_decode(r.fls).astype(np.int64)
-                if len(getattr(r, "fls", b"")) > 0
-                else np.full(p[0].size, shards_mod.FLAG_UNKNOWN, dtype=np.int64)
-                for r, p in zip(g.itertuples(), parts)
-            ]
+            flags = [codec.varint_decode(r.fls).astype(np.int64) for r in g.itertuples()]
             docno = np.concatenate([p[0].astype(np.int64) for p in parts])
             keep = ~np.isin(docno, kill)
             if not keep.any():
@@ -476,13 +450,10 @@ def apply_tombstones(
             shard_size=index.shard_size,
             block_size=block_size,
             with_positions=with_positions,
-            has_flag_stream=index.has_flag_stream,
         )
 
     # write path: the expensive rewrite runs exactly once (blocks write);
     # term_stats derive from the WRITTEN parquet, mirroring the build
-    import json as _json
-
     (
         blocks2.repartition(index.n_shards, "shard")
         .sortWithinPartitions("shard", "term", "block_no")
@@ -498,17 +469,9 @@ def apply_tombstones(
     term_stats_from(spark.read.parquet(f"{out_path}/blocks")).write.mode(
         "overwrite"
     ).parquet(f"{out_path}/term_stats")
-    with open(f"{out_path}/meta.json", "w") as f:
-        _json.dump(
-            {
-                "n_docs": n_docs2,
-                "avgdl": avgdl2,
-                "sum_doc_len": sum_dl2,
-                "n_shards": index.n_shards,
-                "shard_size": index.shard_size,
-                "block_size": block_size,
-                "with_positions": with_positions,
-            },
-            f,
-        )
+    shards_mod._write_meta(
+        out_path, n_docs=n_docs2, avgdl=avgdl2, sum_doc_len=sum_dl2,
+        n_shards=index.n_shards, shard_size=index.shard_size,
+        block_size=block_size, with_positions=with_positions,
+    )
     return read_sharded_index(spark, out_path)

@@ -23,12 +23,18 @@ This is the 100 TB-scale physical organization of the logical index
 
 * **posting blocks** — within (shard, term), postings are sorted by docno
   and cut into blocks of ``block_size``; each block stores delta-gap +
-  varint streams (operators/codec.py) for (docno gaps, tf, doc_len) plus
-  block-max metadata: ``max_partial`` = max over the block of the
-  doc-dependent BM25 factor (k1+1)·tf / (k1·(1−b+b·dl/avgdl)+tf), the
-  exact per-block score upper bound used by the WAND scorer
-  (plans/wand.py). Contiguous docnos within a shard keep gaps tiny, so
-  varints are mostly 1 byte.
+  varint streams (operators/codec.py) for (docno gaps, tf, doc_len,
+  boost flags) plus block-max metadata: ``max_partial`` = max over the
+  block of the doc-dependent BM25 factor (k1+1)·tf / (k1·(1−b+b·dl/avgdl)+tf),
+  the exact per-block score upper bound used by the WAND scorer
+  (plans/wand.py), and the avgdl-free ``(max_tf, min_dl)`` pair that
+  re-derives that bound under any other avgdl. Contiguous docnos within a
+  shard keep gaps tiny, so varints are mostly 1 byte.
+
+* **one layout** — every writer (the builds here, segment merge and
+  compaction in operators/merge.py) emits the same blocks / docs_sharded /
+  meta.json columns; :func:`read_sharded_index` checks them once on open
+  and refuses anything else, so no reader keeps a compatibility branch.
 
 Reference parity: this replaces the reference's single pickled
 ``term → [(doc_id, tf)]`` dict (indexer.py:45,149-150,246-248) and its
@@ -128,6 +134,16 @@ _BLOCK_COLS = [
     "max_partial", "max_tf", "min_dl", "gaps", "tfs", "dls", "fls",
 ]
 _BLOCK_POS_COLS = _BLOCK_COLS + ["pcounts", "pgaps"]
+_DOC_COLS = [
+    "shard", "docno", "doc_id", "url", "title", "description",
+    "content_snippet", "doc_len",
+]
+# meta.json = the scalar fields of ShardedIndex; every writer emits all of
+# them (_write_meta) and read_sharded_index requires all of them
+_META_KEYS = (
+    "n_docs", "avgdl", "sum_doc_len", "n_shards", "shard_size", "block_size",
+    "with_positions",
+)
 
 # Per-posting boost-bound flag bits (the ``fls`` varint stream): whether the
 # posting's term is a SUBSTRING of the doc's lowercased title / description /
@@ -135,12 +151,10 @@ _BLOCK_POS_COLS = _BLOCK_COLS + ["pcounts", "pgaps"]
 # token (plans/bm25.py:boost_chain_expr, reference indexer.py:405-441). One
 # byte per posting buys the WAND phase-1 kernel a per-doc boost upper/lower
 # bound far tighter than the global MAX_BOOST=13.5, collapsing candidate
-# emission from O(match set) to O(k) per shard (plans/wand.py). Bit 3 is the
-# "unknown" sentinel used when a merged segment predates the flag stream.
+# emission from O(match set) to O(k) per shard (plans/wand.py).
 FLAG_TITLE = 1
 FLAG_DESC = 2
 FLAG_SNIPPET = 4
-FLAG_UNKNOWN = 8
 
 
 def _boost_flags_col(lt, ld, lc, term) -> "F.Column":
@@ -169,7 +183,8 @@ def encode_blocks_pdf(
     with_positions: bool = False,
     run_col: str | None = None,
 ) -> pd.DataFrame:
-    """(shard, term, docno, tf, doc_len[, positions]) rows → encoded block rows.
+    """(shard, term, docno, tf, doc_len, flags[, positions]) rows → encoded
+    block rows.
 
     Fully vectorized across the WHOLE frame (no per-term or per-block numpy
     calls — at 1M docs a term-bucket group holds ~10⁴ terms / ~10⁴ blocks,
@@ -254,12 +269,8 @@ def encode_blocks_pdf(
         "gaps": _block_slices(gaps.astype(np.uint64)),
         "tfs": _block_slices(tfs_u),
         "dls": _block_slices(dls_u),
-        # boost-bound flag stream (one byte/posting); an empty buffer marks a
-        # block built without flags — the WAND kernel treats it as UNKNOWN
-        # (falls back to the loose MAX_BOOST bound), never as all-zeros
-        "fls": _block_slices(pdf["flags"].to_numpy(dtype=np.int64).astype(np.uint64))
-        if "flags" in pdf.columns
-        else [b""] * len(bstarts),
+        # boost-bound flag stream (one byte/posting, FLAG_* bits)
+        "fls": _block_slices(pdf["flags"].to_numpy(dtype=np.int64).astype(np.uint64)),
     }
     if with_positions:
         if "posv" in pdf.columns:
@@ -372,18 +383,8 @@ class ShardedIndex:
     # query engines probe docs_sharded/blocks directly with row-group
     # pruning instead of joining the whole table into the plan
     path: str | None = None
-    # False when the stored blocks predate the per-posting boost-flag
-    # stream: WAND's emission bounds then fall back to the loose global
-    # MAX_BOOST margin, so candidate volume is not O(k) per shard and the
-    # phase-2 broadcast gate must not trust the tight-bound assumption
-    has_flag_stream: bool = True
-    # False when the stored blocks predate the avgdl-free (max_tf, min_dl)
-    # block-bound columns: tombstone-masked queries and selective compaction
-    # then cannot recompute sound block bounds under a changed avgdl and
-    # must fall back to a full compaction rewrite
-    has_block_bounds: bool = True
-    # exact Σ doc_len over the corpus (None on legacy/in-memory-unknown
-    # layouts): lets a tombstone mask derive the surviving avgdl exactly —
+    # exact Σ doc_len over the corpus (None for a segment build whose avgdl
+    # is overridden): lets a tombstone mask derive the surviving avgdl exactly —
     # (sum_doc_len − Σ killed doc_len) / surviving count — instead of
     # reconstructing the sum from the rounded stored avgdl
     sum_doc_len: int | None = None
@@ -737,10 +738,7 @@ def shard_and_write_from_tokenized(
     )
 
     (
-        tk.select(
-            "shard", "docno", "doc_id", "url", "title", "description",
-            "content_snippet", "doc_len",
-        )
+        tk.select(*_DOC_COLS)
         .repartition(n_shards, "shard")
         .sortWithinPartitions("shard", "docno")
         .write.mode("overwrite")
@@ -767,20 +765,19 @@ def shard_and_write_from_tokenized(
     )
 
     release_docnos(docnos_src)  # blocks+docs are written; the cache is dead weight
-    with open(f"{path}/meta.json", "w") as f:
-        json.dump(
-            {
-                "n_docs": n_docs,
-                "avgdl": avgdl,
-                "sum_doc_len": sum_doc_len,
-                "n_shards": n_shards,
-                "shard_size": shard_size,
-                "block_size": block_size,
-                "with_positions": with_positions,
-            },
-            f,
-        )
+    _write_meta(
+        path, n_docs=n_docs, avgdl=avgdl, sum_doc_len=sum_doc_len,
+        n_shards=n_shards, shard_size=shard_size, block_size=block_size,
+        with_positions=with_positions,
+    )
     return read_sharded_index(spark, path)
+
+
+def _write_meta(path: str, **meta) -> None:
+    """Write ``meta.json``: exactly the _META_KEYS read_sharded_index needs."""
+    os.makedirs(path, exist_ok=True)
+    with open(f"{path}/meta.json", "w") as f:
+        json.dump({k: meta[k] for k in _META_KEYS}, f)
 
 
 def write_sharded_index(index: ShardedIndex, path: str) -> None:
@@ -802,45 +799,39 @@ def write_sharded_index(index: ShardedIndex, path: str) -> None:
     # releases only a docnos cache build_sharded_index itself created
     # (caller-supplied docnos may back other live segment plans)
     release_docnos(index)
-    meta = {
-        "n_docs": index.n_docs,
-        "avgdl": index.avgdl,
-        "sum_doc_len": index.sum_doc_len,
-        "n_shards": index.n_shards,
-        "shard_size": index.shard_size,
-        "block_size": index.block_size,
-        "with_positions": index.with_positions,
-    }
-    os.makedirs(path, exist_ok=True)
-    with open(f"{path}/meta.json", "w") as f:
-        json.dump(meta, f)
+    _write_meta(path, **{k: getattr(index, k) for k in _META_KEYS})
 
 
 def read_sharded_index(spark: SparkSession, path: str) -> ShardedIndex:
+    """Open a written sharded index.
+
+    The layout every writer emits is the only one accepted: a missing
+    meta.json key, block column (the ``fls`` flag stream, the avgdl-free
+    ``max_tf``/``min_dl`` bounds, ...) or docs_sharded column (``doc_len``,
+    ...) raises a ValueError naming it, so no reader downstream needs a
+    compatibility branch. The check reads only the schemas Spark resolves
+    when it opens the tables — no extra job."""
     with open(f"{path}/meta.json") as f:
         meta = json.load(f)
-    meta.setdefault("with_positions", False)
-    meta.setdefault("sum_doc_len", None)
     blocks = spark.read.parquet(f"{path}/blocks")
-    has_flags = "fls" in blocks.columns
-    if not has_flags:
-        # index written before the boost-bound flag stream existed: empty
-        # buffer = UNKNOWN, the kernel falls back to the MAX_BOOST bound
-        blocks = blocks.withColumn("fls", F.lit(b""))
-    has_bounds = "max_tf" in blocks.columns
-    if not has_bounds:
-        # pre-(max_tf, min_dl) layout: NULL bounds — readable, but masked
-        # queries / selective compaction refuse (see ShardedIndex fields)
-        blocks = blocks.withColumn(
-            "max_tf", F.lit(None).cast("int")
-        ).withColumn("min_dl", F.lit(None).cast("int"))
+    docs = spark.read.parquet(f"{path}/docs_sharded")
+    block_cols = _BLOCK_POS_COLS if meta.get("with_positions") else _BLOCK_COLS
+    missing = (
+        [f"meta.json key {k!r}" for k in _META_KEYS if k not in meta]
+        + [f"blocks column {c!r}" for c in block_cols if c not in blocks.columns]
+        + [f"docs_sharded column {c!r}" for c in _DOC_COLS if c not in docs.columns]
+    )
+    if missing:
+        raise ValueError(
+            f"{path} is not a current sharded index: missing "
+            f"{', '.join(missing)}; rebuild the index "
+            "(shards.build_and_write_sharded)"
+        )
     return ShardedIndex(
-        has_block_bounds=has_bounds,
         blocks=blocks,
-        docs=spark.read.parquet(f"{path}/docs_sharded"),
+        docs=docs,
         term_stats=spark.read.parquet(f"{path}/term_stats"),
         path=path,
-        has_flag_stream=has_flags,
         **meta,
     )
 
@@ -966,19 +957,7 @@ def export_index(spark: SparkSession, index: ShardedIndex) -> "IndexTables":
     postings = decoded.join(mapping, "docno").select("term", "doc_id", "tf", "doc_len")
 
     docs = index.docs.select("doc_id", "url", "title", "description", "content_snippet")
-    if "doc_len" in index.docs.columns:
-        doc_stats = index.docs.select("doc_id", "doc_len")
-    else:
-        # pre-doc_len docs_sharded layouts: recover doc_len from any posting
-        # of the doc (identical across a doc's postings). Caveat: docs with
-        # zero postings (all tokens filtered) are absent from blocks, so
-        # this fallback misses them; current builds store doc_len in docs.
-        doc_stats = (
-            decoded.groupBy("docno")
-            .agg(F.first("doc_len").alias("doc_len"))
-            .join(mapping, "docno")
-            .select("doc_id", "doc_len")
-        )
+    doc_stats = index.docs.select("doc_id", "doc_len")
     stats = spark.createDataFrame(
         [(index.n_docs, float(index.avgdl))], "n_docs long, avgdl double"
     )

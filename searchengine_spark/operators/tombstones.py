@@ -7,16 +7,17 @@ docnos before scoring/emission, and the corpus statistics a masked query
 must score with (N', avgdl', per-query-term df') are derived exactly:
 
 * N' and Σdoc_len' arithmetically from the masked rows (O(tombstones));
-  new index layouts carry the exact corpus Σdoc_len in meta, so avgdl' is
-  bit-equal to a fresh build over the survivors (legacy layouts reconstruct
-  the sum from the rounded stored avgdl — exact to ~1 ulp);
+  a full build carries the exact corpus Σdoc_len in meta, so avgdl' is
+  bit-equal to a fresh build over the survivors (a segment build that
+  overrides avgdl carries no Σdoc_len and reconstructs the sum from the
+  rounded stored avgdl — exact to ~1 ulp);
 * df' per QUERY term at query time, by counting killed postings in the
   already-pruned posting blocks of the query's terms — O(query-term
   postings), the same rows WAND phase 1 reads anyway, never an index scan;
 * per-block WAND bounds recomputed from the avgdl-free (max_tf, min_dl)
   block metadata under the masked avgdl' (``max_partial`` bakes the
-  build-time avgdl and would be unsound once avgdl changes), which is why
-  masking requires the bounds columns (``index.has_block_bounds``).
+  build-time avgdl and would be unsound once avgdl changes); every block
+  carries them (shards.read_sharded_index refuses an index without).
 
 This makes masked queries rank- AND score-identical to a fresh build of
 the surviving corpus (property-tested in tests/test_tombstones.py), while
@@ -74,17 +75,6 @@ def build_mask(
     the collect is O(tombstones). Surviving N/avgdl derive arithmetically
     (see module doc); no block is read, decoded, or rewritten.
     """
-    if not getattr(index, "has_block_bounds", False):
-        raise ValueError(
-            "tombstone masking needs the avgdl-free (max_tf, min_dl) block "
-            "bounds; this index predates them — run apply_tombstones "
-            "(full compaction) or rebuild the index"
-        )
-    if "doc_len" not in index.docs.columns:
-        raise ValueError(
-            "tombstone masking needs doc_len in docs_sharded (pre-doc_len "
-            "layout: export + rebuild the index first)"
-        )
     tomb_ids = tombstones.select("doc_id").distinct()
     # The cap applies to MATCHED tombstones (ids actually present in the
     # index) — a replayed kill log full of already-compacted ids must not
@@ -117,7 +107,7 @@ def build_mask(
     if index.sum_doc_len is not None:
         avgdl2 = (index.sum_doc_len - killed_dl) / n2  # exact
     else:
-        # legacy meta without Σdoc_len: reconstruct from the stored avgdl —
-        # exact up to ~1 ulp of the original rounding
+        # segment build with an overridden avgdl carries no Σdoc_len:
+        # reconstruct from the stored avgdl — exact up to ~1 ulp
         avgdl2 = (index.avgdl * index.n_docs - killed_dl) / n2
     return TombstoneMask(killed=killed, n_docs=n2, avgdl=float(avgdl2))

@@ -2350,7 +2350,7 @@ def decontaminate_against(
     contaminated). Map-only gram generation (higher-order array fns), a
     hash probe against the benchmark set, one doc-keyed hash-agg.
 
-    Join-strategy gate (mirrors the WAND docs_join gate): production eval
+    Join-strategy gate (mirrors the WAND phase-2 join gate): production eval
     suites are MB-scale and the gram probe broadcasts, but the operator
     accepts ANY frame — a mis-sized call must not become a driver OOM
     (round-3 verdict #6). The RAW gram count — an upper bound on the

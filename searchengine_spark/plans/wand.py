@@ -35,8 +35,7 @@ threshold. Two exchange-free-on-docs join modes, chosen by a size gate:
 * **broadcast** (small refined set): ``index.docs`` probes the broadcast
   candidates map-side — a BroadcastHashJoin whose streamed side is the
   docs scan;
-* **direct probe** (large refined set, or an index without the flag
-  stream, whose fallback bounds are loose): candidates repartition by
+* **direct probe** (large refined set): candidates repartition by
   shard and each task reads ITS shard's rows of ``docs_sharded`` straight
   through pyarrow with (shard, docno-range) row-group pruning — the docs
   table never enters the Spark plan at all, so nothing about it can
@@ -65,10 +64,10 @@ Exactness argument (property-tested against the exhaustive engine):
   boost chain tests per query token). For doc d with matched flagged terms:
 
   - token-level factors are bounded both ways: the title/desc match pcts lie
-    between (known-present flags)/n_orig and (known-present + unknown
+    between (present flags)/n_orig and (present flags + unknown
     tokens)/n_orig, where *unknown* covers orig tokens with no posting in d
-    (they can still be field substrings) and flagless postings; same for
-    the all-tokens-in-snippet proximity test;
+    (they can still be field substrings); same for the
+    all-tokens-in-snippet proximity test;
   - the phrase chain compares the FULL query string, and a stemmed token
     need not be a substring of it ("happily" → "happili"), so token bits
     alone cannot rule a phrase out. A matched term t that IS a substring of
@@ -85,8 +84,7 @@ Exactness argument (property-tested against the exhaustive engine):
     < θ_k ≤ kth-largest boosted in the shard, so ≥ k shard-mates beat it.
     For the bulk of the corpus (matched tokens flagged 0, free tokens
     Bloom-absent) UBboost collapses to 1.0 and emission approaches the
-    exact per-shard top-k; an index without the flag/signature streams
-    falls back to the global MAX_BOOST margin, which is still exact.
+    exact per-shard top-k.
 
 Everything inside the kernel is numpy/pandas over Arrow batches
 (``applyInPandas`` by shard); decode is the vectorized varint codec. The
@@ -187,7 +185,6 @@ def _phase1_kernel(
         return pd.DataFrame(columns=["query_id", "shard", "docno", "raw", "lb", "ub"])
     blocks_pdf = blocks_pdf.reset_index(drop=True)
     shard = int(blocks_pdf["shard"].iloc[0])
-    has_flags = "fls" in blocks_pdf.columns
     decode_cache: dict[int, tuple] = {}
     # slice the global kill set to this task's docno range once
     kill_sh = None
@@ -204,19 +201,19 @@ def _phase1_kernel(
         if i not in decode_cache:
             r = blocks_pdf.iloc[i]
             d, t, dl = codec.decode_postings(r["gaps"], r["tfs"], r["dls"])
-            fl = None
-            if has_flags and len(r["fls"]) > 0:
-                f = codec.varint_decode(r["fls"]).astype(np.int64)
-                if f.size == d.size:
-                    fl = f
+            fl = codec.varint_decode(r["fls"]).astype(np.int64)
+            if fl.size != d.size:
+                raise ValueError(
+                    f"corrupt index: shard {shard}, term {r['term']!r} has a "
+                    f"block with {fl.size} boost flags for {d.size} postings"
+                )
             d = d.astype(np.int64)
             if sub_range is not None:
                 # mask to the cell: docnos ascend within a block, so the
                 # window is one contiguous slice
                 a = int(np.searchsorted(d, sub_range[0]))
                 z = int(np.searchsorted(d, sub_range[1], side="right"))
-                d, t, dl = d[a:z], t[a:z], dl[a:z]
-                fl = fl[a:z] if fl is not None else None
+                d, t, dl, fl = d[a:z], t[a:z], dl[a:z], fl[a:z]
             decode_cache[i] = (d, t, dl, fl)
         return decode_cache[i]
 
@@ -324,7 +321,7 @@ def _phase1_kernel(
         def score_docnos(block_positions, restrict=None, killed=None, with_bounds=False):
             """Decode the given blocks, sum w·partial per docno. With
             ``with_bounds``, also accumulate the per-doc flag sums feeding
-            the boost bounds: [known_mult, present_title, present_desc,
+            the boost bounds: [matched_mult, present_title, present_desc,
             present_snip, ruledout_title, ruledout_desc, ruledout_snip]."""
             parts_d, parts_s, parts_e = [], [], []
             for bi in block_positions:
@@ -337,22 +334,20 @@ def _phase1_kernel(
                 parts_s.append(w * partial)
                 if with_bounds:
                     ext = np.zeros((d.size, 7))
-                    if fl is not None:
-                        known = (fl & 8) == 0  # FLAG_UNKNOWN sentinel
-                        b_t = ((fl & 1) > 0) & known
-                        b_d = ((fl & 2) > 0) & known
-                        b_s = ((fl & 4) > 0) & known
-                        m_o = orig_mult.get(t, 0)
-                        if m_o:
-                            ext[:, 0] = m_o * known
-                            ext[:, 1] = m_o * b_t
-                            ext[:, 2] = m_o * b_d
-                            ext[:, 3] = m_o * b_s
-                        if t in in_q:
-                            # term ⊆ query ∧ field ⊉ term ⇒ field ⊉ query
-                            ext[:, 4] = known & ~b_t
-                            ext[:, 5] = known & ~b_d
-                            ext[:, 6] = known & ~b_s
+                    b_t = (fl & 1) > 0
+                    b_d = (fl & 2) > 0
+                    b_s = (fl & 4) > 0
+                    m_o = orig_mult.get(t, 0)
+                    if m_o:
+                        ext[:, 0] = m_o
+                        ext[:, 1] = m_o * b_t
+                        ext[:, 2] = m_o * b_d
+                        ext[:, 3] = m_o * b_s
+                    if t in in_q:
+                        # term ⊆ query ∧ field ⊉ term ⇒ field ⊉ query
+                        ext[:, 4] = ~b_t
+                        ext[:, 5] = ~b_d
+                        ext[:, 6] = ~b_s
                     parts_e.append(ext)
             if not parts_d:
                 e = np.empty(0, np.int64), np.empty(0)
@@ -417,8 +412,7 @@ def _phase1_kernel(
         # not only when shard-local emission gates (su.size > k): the bounds
         # also feed the cross-shard θ-refinement in search_batch, where a
         # tight lb from any shard raises θ_global and a tight ub lets a
-        # candidate be dropped before the phase-2 metadata probe. UB/LB
-        # collapse to MAX_BOOST/1 when the index carries no flag stream.
+        # candidate be dropped before the phase-2 metadata probe.
         # bounds-only aux terms: the query's idf<=0 terms were dropped
         # from scoring (their contribution is 0), but their posting
         # FLAGS still resolve those orig tokens' field presence exactly
@@ -436,8 +430,6 @@ def _phase1_kernel(
                 continue
             for ri in by_term[t].index:
                 d, _tf, _dl, fl = decoded(int(ri))
-                if fl is None:
-                    continue
                 pos = np.searchsorted(du, d)
                 ok = pos < du.size
                 pos_ok = pos[ok]
@@ -446,19 +438,18 @@ def _phase1_kernel(
                 if idx.size == 0:
                     continue
                 flh = fl[ok][hit]
-                known = (flh & 8) == 0
-                b_t = ((flh & 1) > 0) & known
-                b_d = ((flh & 2) > 0) & known
-                b_s = ((flh & 4) > 0) & known
+                b_t = (flh & 1) > 0
+                b_d = (flh & 2) > 0
+                b_s = (flh & 4) > 0
                 if m_o:
-                    eu[idx, 0] += m_o * known
+                    eu[idx, 0] += m_o
                     eu[idx, 1] += m_o * b_t
                     eu[idx, 2] += m_o * b_d
                     eu[idx, 3] += m_o * b_s
                 if t_in_q:
-                    eu[idx, 4] += known & ~b_t
-                    eu[idx, 5] += known & ~b_d
-                    eu[idx, 6] += known & ~b_s
+                    eu[idx, 4] += ~b_t
+                    eu[idx, 5] += ~b_d
+                    eu[idx, 6] += ~b_s
         # field-signature Bloom pass for FREE orig tokens — those with
         # no posting rows in this shard (stopwords and OOV words have
         # none anywhere; a scored/aux term can be absent shard-locally).
@@ -586,12 +577,6 @@ class WandSearchEngine:
         # cells, one kernel task each. None = auto policy (_sub_split).
         self.sub_split = sub_split
         if mask is not None:
-            if not getattr(index, "has_block_bounds", False):
-                raise ValueError(
-                    "tombstone-masked queries need the avgdl-free "
-                    "(max_tf, min_dl) block bounds; this index predates "
-                    "them — compact (apply_tombstones) or rebuild instead"
-                )
             self.avgdl = float(mask.avgdl)
             # mask and index are immutable on an engine instance, so a
             # term's killed-count never changes — memoize across batches
@@ -951,15 +936,12 @@ class WandSearchEngine:
         stopwords=DEFAULT_STOPWORDS,
         with_metadata: bool = True,
         prune: bool = True,
-        docs_join: str = "auto",
     ) -> DataFrame | None:
-        """Exact batched top-k (module doc). ``docs_join`` picks the phase-2
-        metadata strategy: ``"broadcast"`` (hash-join probe of the broadcast
-        refined candidates), ``"direct"`` (per-shard pyarrow probe — needs a
-        written index, i.e. ``index.path``), or ``"auto"`` (direct when the
-        pre-refinement candidate ceiling k·n_shards·|batch| exceeds
-        BROADCAST_CAND_CEILING or the index lacks the flag stream whose
-        bounds keep emission tight; broadcast otherwise).
+        """Exact batched top-k (module doc). The phase-2 metadata strategy
+        is gated on size: the direct per-shard pyarrow probe when the index
+        is written (``index.path``) and the pre-refinement candidate ceiling
+        k·n_shards·|batch| exceeds BROADCAST_CAND_CEILING, the broadcast
+        probe of the refined candidates otherwise.
 
         NOTE: with ``with_metadata=True`` this method is EAGER — the ranked
         winners (≤ k·|batch| rows) are collected here to drive the pruned
@@ -990,9 +972,7 @@ class WandSearchEngine:
         # the caller executes later, so it uses MEMORY_ONLY, whose blocks
         # are LRU-EVICTABLE (eviction just re-runs the kernel for the
         # evicted partitions). The finally below drops the persist on every
-        # exit — eager success, ANY exception (including the docs_join
-        # ValueError, which used to leak the entry) — except the lazy
-        # return, which hands the entry to self._lazy_cands; the next call
+        # exit — eager success or ANY exception — except the lazy return, which hands the entry to self._lazy_cands; the next call
         # (or release()) drops that one, so an engine never accumulates
         # cache entries however many batches it serves.
         from pyspark import StorageLevel
@@ -1004,14 +984,14 @@ class WandSearchEngine:
         )
         try:
             return self._finish_batch(
-                raw_cands, qinfo, term_list, top_k, with_metadata, docs_join
+                raw_cands, qinfo, term_list, top_k, with_metadata
             )
         finally:
             if raw_cands is not self._lazy_cands:
                 raw_cands.unpersist(blocking=False)
 
     def _finish_batch(
-        self, raw_cands, qinfo, term_list, top_k, with_metadata, docs_join
+        self, raw_cands, qinfo, term_list, top_k, with_metadata
     ) -> DataFrame:
         """Phases 2+ of search_batch, split out so the caller's finally can
         own the raw_cands persist lifecycle."""
@@ -1019,47 +999,32 @@ class WandSearchEngine:
 
         # ---- phase 2: metadata for REFINED survivors only ----------------
         # join-mode gate (module doc): broadcast is only safe while the
-        # worst-case candidate ceiling stays small AND the index carries the
-        # flag stream (without it the per-shard emission bounds fall back to
-        # the loose MAX_BOOST margin and candidates can approach the match
-        # set); past either limit, the direct per-shard probe reads only the
-        # row groups the candidates touch — exchange-free on docs in both
-        # modes (asserted in tests/test_explain_plans).
-        if docs_join == "auto":
-            # emission floor is per phase-1 GROUP (n_shards × sub-split
-            # cells), so the ceiling estimate scales with both
-            ceiling = (
-                self.index.n_shards * self._sub_split() * max(top_k, 1) * len(qinfo)
-            )
-            docs_join = (
-                "direct"
-                if self.index.path is not None
-                and (
-                    ceiling > self.BROADCAST_CAND_CEILING
-                    or not self.index.has_flag_stream
-                )
-                else "broadcast"
-            )
-            # NOTE (measured, 1M-doc bench corpus, BASELINE.md §query-side
-            # scaling): the k·n_shards·|batch| estimate is the emission
-            # FLOOR — a tie-heavy corpus can emit orders of magnitude more
-            # (33.6k estimated vs 1.6M refined). An over-floor emission
-            # must NOT flip this gate to direct: the direct probe is a
-            # winner-scale fetch (pyarrow row-group ranges), and a
-            # candidate set whose docno ranges span whole shards makes it
-            # re-read the docs store through pandas — measured 2× slower
-            # than this broadcast join's JVM-side scan at 1.6M candidates
-            # (an ~80 MB relation, still comfortably broadcastable).
-        if docs_join == "direct" and self.index.path is None:
-            raise ValueError(
-                "docs_join='direct' needs a written index (index.path); "
-                "this index is an in-memory plan"
-            )
+        # worst-case candidate ceiling stays small; past it, the direct
+        # per-shard probe reads only the row groups the candidates touch —
+        # exchange-free on docs in both modes (asserted in
+        # tests/test_explain_plans). Emission floor is per phase-1 GROUP
+        # (n_shards × sub-split cells), so the ceiling scales with both.
+        ceiling = (
+            self.index.n_shards * self._sub_split() * max(top_k, 1) * len(qinfo)
+        )
+        direct = (
+            self.index.path is not None and ceiling > self.BROADCAST_CAND_CEILING
+        )
+        # NOTE (measured, 1M-doc bench corpus, BASELINE.md §query-side
+        # scaling): the k·n_shards·|batch| estimate is the emission
+        # FLOOR — a tie-heavy corpus can emit orders of magnitude more
+        # (33.6k estimated vs 1.6M refined). An over-floor emission
+        # must NOT flip this gate to direct: the direct probe is a
+        # winner-scale fetch (pyarrow row-group ranges), and a
+        # candidate set whose docno ranges span whole shards makes it
+        # re-read the docs store through pandas — measured 2× slower
+        # than this broadcast join's JVM-side scan at 1.6M candidates
+        # (an ~80 MB relation, still comfortably broadcastable).
         qmeta = self.spark.createDataFrame(
             [(qid, oq, toks) for qid, _, _, toks, oq in qinfo],
             "query_id int, original_query string, orig_tokens array<string>",
         )
-        if docs_join == "direct":
+        if direct:
             fetched = self._probe_docs_direct(candidates)
         else:
             docs_side = self.index.docs.select(

@@ -2,6 +2,7 @@
 expressions vs reference-semantics Python, over handcrafted URLs/pages and
 the generated corpus (SURVEY.md §2.2 F4/F6-F9/F11, §2.4 A7)."""
 
+import re
 from urllib.parse import urlparse
 
 import pytest
@@ -288,8 +289,10 @@ def test_extract_anchor_texts_cases(case):
 
 def test_anchor_texts_resolution_matches_extract_links():
     # every anchor target must resolve exactly like F5 extract_links
-    # (shared _resolve_href); links without well-formed close tags are the
-    # only legal difference
+    # (shared _resolve_href); the legal differences are links without a
+    # well-formed close tag and nested or overlapping anchors (the
+    # non-greedy outer match swallows an inner <a>, so that inner link has
+    # no anchor-text row) — this input has neither
     html = (
         '<a href="/a">one</a> <a href="https://x.org/b?k=v#f">two</a> '
         '<a href="rel/c">three</a>'
@@ -389,3 +392,15 @@ def test_cli_linkrank(spark, tmp_path):
         "dst_url", "term", "n_occurrences", "n_anchors"
     }
     assert anchors.count() > 0
+
+
+def test_cli_linkrank_bucket_table_per_output(tmp_path):
+    """Concurrent linkrank runs with different --out paths must not share
+    (and DROP) one bucketed edge table; the same path maps to one name."""
+    from searchengine_spark import cli
+
+    a = cli.linkrank_bucket_table(str(tmp_path / "a"))
+    b = cli.linkrank_bucket_table(str(tmp_path / "b"))
+    assert a != b
+    assert a == cli.linkrank_bucket_table(str(tmp_path / "x" / ".." / "a"))
+    assert re.fullmatch(r"[A-Za-z_][A-Za-z0-9_]*", a)

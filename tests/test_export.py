@@ -89,24 +89,3 @@ def test_exhaustive_over_export_rank_identical_to_wand(spark, sharded, exported)
     b = [(r["query_id"], r["rank"], r["doc_id"], round(r["score"], 9))
          for r in exh.collect()]
     assert a == b
-
-
-def test_export_fallback_without_doc_len_column(spark, sharded):
-    """Pre-doc_len docs_sharded layouts: doc_stats recovered from postings."""
-    legacy = shards.ShardedIndex(
-        blocks=sharded.blocks,
-        docs=sharded.docs.drop("doc_len"),
-        term_stats=sharded.term_stats,
-        n_docs=sharded.n_docs,
-        avgdl=sharded.avgdl,
-        n_shards=sharded.n_shards,
-        shard_size=sharded.shard_size,
-        block_size=sharded.block_size,
-        with_positions=sharded.with_positions,
-    )
-    tables = shards.export_index(spark, legacy)
-    from_docs = shards.export_index(spark, sharded)
-    a = {r["doc_id"]: r["doc_len"] for r in tables.doc_stats.collect()}
-    b = {r["doc_id"]: r["doc_len"] for r in from_docs.doc_stats.collect()}
-    # fallback misses only zero-posting docs (none in this corpus)
-    assert a == b

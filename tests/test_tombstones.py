@@ -142,20 +142,6 @@ def test_masked_query_identical_to_fresh_build(spark, corpora):
         assert abs(s1 - s2) <= 1e-9 * max(abs(s1), abs(s2), 1.0)
 
 
-def test_mask_requires_block_bounds(spark, corpora):
-    import dataclasses
-
-    from searchengine_spark.operators import tombstones
-
-    full, _fresh, _compacted, tomb_ids = corpora
-    legacy = dataclasses.replace(full, has_block_bounds=False)
-    with pytest.raises(ValueError, match="block "):
-        tombstones.build_mask(spark, legacy, tomb_ids)
-    mask = tombstones.build_mask(spark, full, tomb_ids)
-    with pytest.raises(ValueError, match="block "):
-        WandSearchEngine(spark, legacy, mask=mask)
-
-
 def test_mask_cap_enforced(spark, corpora):
     from searchengine_spark.operators import tombstones
 

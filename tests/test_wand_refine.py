@@ -20,7 +20,6 @@ score-identical to the exhaustive Catalyst engine.
 import math
 
 import pytest
-from pyspark.sql import functions as F
 
 from searchengine_spark.operators import shards
 from searchengine_spark.plans.bm25 import BM25SearchEngine
@@ -42,6 +41,13 @@ def many_shard_index(spark, tmp_path_factory):
 @pytest.fixture(scope="module")
 def engine(spark, many_shard_index):
     return WandSearchEngine(spark, many_shard_index)
+
+
+def _direct_engine(spark, index):
+    """An engine whose phase-2 gate always picks the direct probe."""
+    eng = WandSearchEngine(spark, index)
+    eng.BROADCAST_CAND_CEILING = 0
+    return eng
 
 
 def _results(df):
@@ -148,21 +154,23 @@ def test_refinement_is_exact_vs_exhaustive(spark, engine, many_shard_index):
         assert math.isclose(s1, s2, rel_tol=1e-9, abs_tol=1e-12)
 
 
-def test_direct_probe_matches_broadcast(spark, engine):
+def test_direct_probe_matches_broadcast(spark, engine, many_shard_index):
     queries = webgen.reference_queries()[:8]
-    bc = _results(engine.search_batch(queries, top_k=TOP_K, docs_join="broadcast"))
-    dp = _results(engine.search_batch(queries, top_k=TOP_K, docs_join="direct"))
+    bc = _results(engine.search_batch(queries, top_k=TOP_K))
+    dp = _results(
+        _direct_engine(spark, many_shard_index).search_batch(queries, top_k=TOP_K)
+    )
     assert bc == dp
     assert len(bc) > 0
 
 
-def test_direct_probe_plan_never_scans_docs(spark, engine):
+def test_direct_probe_plan_never_scans_docs(spark, many_shard_index):
     """In direct mode the docs table must not appear in the Spark plan at
     all (no scan, no exchange, no broadcast of metadata) — metadata is read
     per-shard through pyarrow with row-group pruning."""
     queries = webgen.reference_queries()[:3]
-    out = engine.search_batch(
-        queries, top_k=TOP_K, with_metadata=False, docs_join="direct"
+    out = _direct_engine(spark, many_shard_index).search_batch(
+        queries, top_k=TOP_K, with_metadata=False
     )
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "docs_sharded" not in plan, plan
@@ -173,52 +181,25 @@ def test_direct_probe_plan_never_scans_docs(spark, engine):
 
 
 def test_auto_gate_picks_direct_past_ceiling(spark, many_shard_index):
-    """auto mode must switch to the direct probe when the pre-refinement
-    candidate ceiling (k·n_shards·|batch|) exceeds the broadcast cap, and
-    when the index lacks the flag stream (loose emission bounds)."""
+    """The gate must switch to the direct probe when the pre-refinement
+    candidate ceiling (k·n_shards·|batch|) exceeds the broadcast cap."""
     eng = WandSearchEngine(spark, many_shard_index)
     eng.BROADCAST_CAND_CEILING = 10  # force the ceiling branch
     queries = webgen.reference_queries()[:2]
     out = eng.search_batch(queries, top_k=TOP_K, with_metadata=False)
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "docs_sharded" not in plan, plan
-    # flagless index (legacy layout) also routes to direct, whatever the size
-    import dataclasses
-
-    legacy = dataclasses.replace(many_shard_index, has_flag_stream=False)
-    out2 = WandSearchEngine(spark, legacy).search_batch(
-        queries, top_k=TOP_K, with_metadata=False
-    )
-    plan2 = out2._jdf.queryExecution().executedPlan().toString()
-    assert "docs_sharded" not in plan2, plan2
 
 
-def test_direct_probe_empty_and_sparse_results(spark, engine):
+def test_direct_probe_empty_and_sparse_results(spark, many_shard_index):
     """Direct mode must survive queries with zero candidates and queries
     with fewer than k matches (θ is NULL — nothing may be dropped)."""
-    res = engine.search_batch(
+    res = _direct_engine(spark, many_shard_index).search_batch(
         [(0, "zzzzunseen qqqtokens"), (1, webgen.reference_queries()[0][1])],
         top_k=TOP_K,
-        docs_join="direct",
     )
     rows = res.collect() if res is not None else []
     assert all(r["query_id"] == 1 for r in rows)
-
-
-def test_direct_mode_requires_written_index(spark):
-    from searchengine_spark.operators import index_build
-
-    pages = spark.createDataFrame(webgen.generate_pandas(30))
-    tables = index_build.build_index(pages)
-    mem = shards.build_sharded_index(spark, tables, n_shards=2)
-    assert mem.path is None
-    # a term with idf > 0, so the batch survives query analysis and reaches
-    # the join-mode gate
-    term = mem.term_stats.filter(F.col("idf") > 0).orderBy("term").first()["term"]
-    with pytest.raises(ValueError, match="written index"):
-        WandSearchEngine(spark, mem).search_batch(
-            [(0, term)], top_k=3, docs_join="direct"
-        )
 
 
 def test_lazy_persist_lifecycle_is_bounded(spark, many_shard_index):
@@ -226,8 +207,7 @@ def test_lazy_persist_lifecycle_is_bounded(spark, many_shard_index):
     entries: each lazy plan's phase-1 persist is handed to the engine and
     dropped by the NEXT batch (or release()), so an engine holds at most
     one entry however many batches it serves; the eager path (and any
-    failing path — e.g. the docs_join='direct' ValueError on an unwritten
-    index) leaves nothing behind."""
+    failing path) leaves nothing behind."""
     cm = spark._jsparkSession.sharedState().cacheManager()
     eng = WandSearchEngine(spark, many_shard_index)
     baseline_empty = cm.isEmpty()
