@@ -544,7 +544,8 @@ def run_delete_bench(cpus: int = CPUS, n_docs: int = N_DOCS) -> dict:
       100-doc mask: the first batch pays the one-off df-correction job,
       steady state is the memoized mask shipped with the kernels;
     * compact_selective — apply_tombstones for the same 100-doc kill set
-      (decodes only blocks whose docno range hits the kill set).
+      (decodes only blocks whose docno range hits the kill set), written
+      with shards.write_sharded_index.
     """
     import numpy as np
 
@@ -610,9 +611,9 @@ def run_delete_bench(cpus: int = CPUS, n_docs: int = N_DOCS) -> dict:
     out["masked_steady"] = round(time.time() - t0, 3)
 
     t0 = time.time()
-    merge.apply_tombstones(
-        spark, index, kill100,
-        out_path=os.path.join(BENCH_DIR, "compact_sel"),
+    shards_mod.write_sharded_index(
+        merge.apply_tombstones(spark, index, kill100),
+        os.path.join(BENCH_DIR, "compact_sel"),
     )
     out["compact_selective"] = round(time.time() - t0, 3)
 
@@ -737,8 +738,10 @@ def run_pagerank_bench(cpus: int = CPUS) -> dict:
     Protocol: graph cached before timing; one 1-iteration run unmeasured
     (codegen/JIT warm-up — the loop is pure JVM, no Python workers), then
     the measured PR_BENCH_ITERS-iteration run. Records wall, edges/sec
-    (edges × iterations / wall — each iteration joins + aggregates the
-    full edge frame), final dangling mass, and asserts mass conservation
+    (edges × iterations / wall, where ``edges`` counts the edges the
+    operator keeps — distinct, self-loops dropped — since each iteration
+    joins + aggregates exactly that frame; the generated count is
+    ``edges_raw``), final dangling mass, and asserts mass conservation
     and that the hub is the top-ranked node."""
     from pyspark.sql import functions as F
 
@@ -769,7 +772,10 @@ def run_pagerank_bench(cpus: int = CPUS) -> dict:
         )
     )
     edges.cache()
-    n_edges = edges.count()
+    n_raw = edges.count()
+    # the operator's edge frame (graph.pagerank dedups and drops
+    # self-loops) — the work each iteration does, counted before timing
+    n_edges = edges.filter(F.col("src") != F.col("dst")).distinct().count()
     nodes = ids.select(F.col("id").alias("node"))
 
     # bucketed edge table is the production path (exchange-free edge scans
@@ -777,7 +783,7 @@ def run_pagerank_bench(cpus: int = CPUS) -> dict:
     bucket = (
         None
         if os.environ.get("SPARK_GRAFT_PR_NO_BUCKET")
-        else "_bench_pagerank_edges"
+        else f"_bench_pagerank_edges_{os.getpid()}"
     )
     # warm-up runs the SAME path as the measurement (codegen/JIT; and the
     # plain path's 46M-row edge checkpoint would OOM a heap the bucketed
@@ -810,6 +816,7 @@ def run_pagerank_bench(cpus: int = CPUS) -> dict:
         "unit": "sec",
         "nodes": n,
         "edges": n_edges,
+        "edges_raw": n_raw,
         "iterations": PR_BENCH_ITERS,
         "edges_per_sec": round(n_edges * PR_BENCH_ITERS / wall, 1),
         "hub_pr": round(float(top["pr"]), 6),

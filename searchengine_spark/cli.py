@@ -111,14 +111,29 @@ def cmd_build(args) -> int:
 
 
 def cmd_optimize(args) -> int:
-    from searchengine_spark.operators import index_build, shards
+    """A built index → sharded compressed blocks: the one sharded build
+    (shards.shard_and_write_from_tokenized) over the stage-1 ``tokenized``
+    table ``build`` keeps beside the logical tables. Outputs of ``export``
+    and ``merge`` carry no such table and are refused."""
+    from pyspark.errors import AnalysisException
+
+    from searchengine_spark.operators import checkpoint, shards
 
     spark = _spark(args)
-    tables = index_build.read_index(spark, args.index)
-    sharded = shards.build_sharded_index(
-        spark, tables, n_shards=args.shards, block_size=args.block_size
+    try:
+        tokenized = checkpoint.read_tokenized(spark, args.index)
+    except AnalysisException:
+        print(
+            f"optimize: no stage-1 table at {args.index}/tokenized — optimize "
+            "re-shards the tokenized table a `build` keeps (export and merge "
+            "outputs have none); rebuild from the pages, or build the sharded "
+            "index directly with `build --sharded`",
+            file=sys.stderr,
+        )
+        return 2
+    sharded = shards.shard_and_write_from_tokenized(
+        spark, tokenized, args.out, n_shards=args.shards, block_size=args.block_size
     )
-    shards.write_sharded_index(sharded, args.out)
     print(json.dumps({"n_shards": sharded.n_shards, "n_docs": sharded.n_docs,
                       "path": args.out}))
     return 0
@@ -202,9 +217,10 @@ def cmd_delete(args) -> int:
         urls = spark.createDataFrame([(u,) for u in args.urls], "url string")
         tomb = index.docs.join(urls, "url").select("doc_id")
     before = index.n_docs
-    # out_path mode: the rewrite executes once; stats derive from the
-    # written blocks instead of re-running the kernel
-    compacted = merge.apply_tombstones(spark, index, tomb, out_path=args.out)
+    # the writer runs the rewrite once; stats derive from the written blocks
+    compacted = shards.write_sharded_index(
+        merge.apply_tombstones(spark, index, tomb), args.out
+    )
     print(
         json.dumps(
             {"docs_before": before, "docs_after": compacted.n_docs, "out": args.out}
@@ -322,7 +338,9 @@ def main(argv: list[str] | None = None) -> int:
     b.add_argument("--shards", type=int, default=None, help="explicit shard count (default: docs-per-shard policy)")
     b.set_defaults(fn=cmd_build)
 
-    o = sub.add_parser("optimize", help="logical index → sharded compressed blocks")
+    o = sub.add_parser(
+        "optimize", help="built index (its kept tokenized table) → sharded compressed blocks"
+    )
     o.add_argument("--index", required=True)
     o.add_argument("--out", required=True)
     o.add_argument("--shards", type=int, default=None, help="explicit shard count (default: docs-per-shard policy)")

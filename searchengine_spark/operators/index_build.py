@@ -33,7 +33,10 @@ hash directories so query-time term lookups prune whole directories —
 the distributed analog of the reference's dict lookup (indexer.py:384-394).
 For the production build prefer operators/shards.build_and_write_sharded,
 which skips this raw postings table entirely (posting rows live only
-inside its single shuffle) and emits the compressed block index.
+inside its single shuffle) and emits the compressed block index. The
+sharded index is only ever built from a stage-1 ``tokenized`` table
+(shards.shard_and_write_from_tokenized); these logical tables feed the
+exhaustive engine, segment merge and export, never the block encoder.
 """
 
 from __future__ import annotations
@@ -478,7 +481,8 @@ def build_and_write_index(
 
     The ``tokenized`` intermediate is itself a table (kept at
     ``{path}/tokenized``) — it is the resume point for checkpointed builds
-    (operators/checkpoint.py) and the input to posting-block compaction.
+    (operators/checkpoint.py) and the input the CLI's ``optimize`` shards
+    into posting blocks.
 
     Each expensive computation runs exactly once: the tf aggregation (the
     big shuffle) feeds the postings write, and term_stats/stats derive

@@ -27,7 +27,6 @@ Property-tested: merge(A,B,C) ≡ merge(merge(A,B),C) ≡ build-from-union
 
 from __future__ import annotations
 
-import math
 from functools import reduce
 
 import numpy as np
@@ -186,13 +185,7 @@ def multi_pass_merge(
     return runs[0]
 
 
-def apply_tombstones(
-    spark: SparkSession,
-    index,
-    tombstones: DataFrame,
-    block_size: int | None = None,
-    out_path: str | None = None,
-):
+def apply_tombstones(spark: SparkSession, index, tombstones: DataFrame):
     """Delete docs from a sharded index (compaction rewrite) — the
     maintenance operator a 10^12-doc index needs for takedowns/GDPR that
     the in-RAM reference (rebuild-the-pickle) never had to express.
@@ -232,17 +225,16 @@ def apply_tombstones(
     same way (their deleted entries dropped), so the sidecar never leaks
     deleted docs' field bits.
 
-    **Pass ``out_path`` for real workloads**: the rewrite is then executed
-    ONCE — blocks and docs are written, and term_stats derive from the
-    written parquet. Without it the returned index is lazy and deriving
-    term_stats from the lazy blocks re-runs the whole rewrite on each
-    materialization (fine for tests, double work at scale).
+    The returned index is LAZY: its blocks and term_stats are plans over
+    the rewrite, and each materialization re-runs it. **Persist it with
+    ``shards.write_sharded_index(apply_tombstones(...), path)``**: the
+    rewrite then runs ONCE (the blocks write) and term_stats derive from
+    the written blocks.
     """
     from searchengine_spark.functions import fieldsig
-    from searchengine_spark.operators.shards import ShardedIndex, read_sharded_index
+    from searchengine_spark.operators.shards import ShardedIndex
 
-    if block_size is None:
-        block_size = index.block_size
+    block_size = index.block_size
     with_positions = index.with_positions
     tomb_ids = tombstones.select("doc_id").distinct()
     docs2 = index.docs.join(tomb_ids, "doc_id", "left_anti")
@@ -420,58 +412,15 @@ def apply_tombstones(
         )
     )
 
-    def term_stats_from(blocks_df: DataFrame) -> DataFrame:
-        return (
-            blocks_df.filter(~F.col("term").startswith("\x00"))
-            .groupBy("term")
-            .agg(F.sum("n").cast("long").alias("df"))
-            .select(
-                "term",
-                "df",
-                F.greatest(
-                    F.lit(0.0),
-                    F.log(
-                        (F.lit(float(n_docs2)) - F.col("df") + 0.5)
-                        / (F.col("df") + 0.5)
-                    ),
-                ).alias("idf"),
-            )
-        )
-
-    if out_path is None:
-        return ShardedIndex(
-            blocks=blocks2,
-            docs=docs2,
-            term_stats=term_stats_from(blocks2),
-            n_docs=n_docs2,
-            avgdl=avgdl2,
-            sum_doc_len=sum_dl2,
-            n_shards=index.n_shards,
-            shard_size=index.shard_size,
-            block_size=block_size,
-            with_positions=with_positions,
-        )
-
-    # write path: the expensive rewrite runs exactly once (blocks write);
-    # term_stats derive from the WRITTEN parquet, mirroring the build
-    (
-        blocks2.repartition(index.n_shards, "shard")
-        .sortWithinPartitions("shard", "term", "block_no")
-        .write.mode("overwrite")
-        .parquet(f"{out_path}/blocks")
+    return ShardedIndex(
+        blocks=blocks2,
+        docs=docs2,
+        term_stats=shards_mod._term_stats(blocks2, n_docs2),
+        n_docs=n_docs2,
+        avgdl=avgdl2,
+        sum_doc_len=sum_dl2,
+        n_shards=index.n_shards,
+        shard_size=index.shard_size,
+        block_size=block_size,
+        with_positions=with_positions,
     )
-    (
-        docs2.repartition(index.n_shards, "shard")
-        .sortWithinPartitions("shard", "docno")
-        .write.mode("overwrite")
-        .parquet(f"{out_path}/docs_sharded")
-    )
-    term_stats_from(spark.read.parquet(f"{out_path}/blocks")).write.mode(
-        "overwrite"
-    ).parquet(f"{out_path}/term_stats")
-    shards_mod._write_meta(
-        out_path, n_docs=n_docs2, avgdl=avgdl2, sum_doc_len=sum_dl2,
-        n_shards=index.n_shards, shard_size=index.shard_size,
-        block_size=block_size, with_positions=with_positions,
-    )
-    return read_sharded_index(spark, out_path)

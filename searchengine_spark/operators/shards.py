@@ -31,10 +31,15 @@ This is the 100 TB-scale physical organization of the logical index
   re-derives that bound under any other avgdl. Contiguous docnos within a
   shard keep gaps tiny, so varints are mostly 1 byte.
 
-* **one layout** — every writer (the builds here, segment merge and
-  compaction in operators/merge.py) emits the same blocks / docs_sharded /
-  meta.json columns; :func:`read_sharded_index` checks them once on open
-  and refuses anything else, so no reader keeps a compatibility branch.
+* **one build path, one writer, one layout** — postings become blocks
+  only in :func:`shard_and_write_from_tokenized` (stage-1 tokenized frame →
+  blocks; :func:`build_and_write_sharded` and the CLI ``optimize`` reach it
+  from pages / a kept ``tokenized`` table), and every sharded index —
+  build or compaction (operators/merge.py) — is written by
+  :func:`write_sharded_index`, with term_stats derived from the written
+  blocks. Segment merge emits the same block columns;
+  :func:`read_sharded_index` checks them once on open and refuses anything
+  else, so no reader keeps a compatibility branch.
 
 Reference parity: this replaces the reference's single pickled
 ``term → [(doc_id, tf)]`` dict (indexer.py:45,149-150,246-248) and its
@@ -62,7 +67,6 @@ from searchengine_spark.config import (
     TITLE_BOOST,
 )
 from searchengine_spark.operators import codec
-from searchengine_spark.operators.index_build import IndexTables
 
 
 def _assert_integral_boosts() -> None:
@@ -121,12 +125,10 @@ def derive_n_shards(n_docs: int) -> int:
     return max(1, math.ceil(n_docs / DEFAULT_DOCS_PER_SHARD))
 
 # Explicit broadcast hints are gated on estimated BYTES, not bare row count:
-# the lowered title/desc/snippet dimension is ~350 B/row and the
-# (doc_id, docno) mapping ~50 B/row, so these caps keep a forced broadcast
-# under ~70 MB / ~200 MB on every executor; past them the keyed join is left
+# the (doc_id, docno) mapping is ~50 B/row, so this cap keeps a forced
+# broadcast under ~200 MB on every executor; past it the keyed join is left
 # to AQE, which shrinks it back to a broadcast at runtime when the actual
 # build-side bytes allow.
-BROADCAST_LOWERED_MAX_ROWS = 200_000   # ~350 B/row ⇒ ≤ ~70 MB
 BROADCAST_DOCNOS_MAX_ROWS = 4_000_000  # ~50 B/row ⇒ ≤ ~200 MB
 
 _BLOCK_COLS = [
@@ -383,8 +385,8 @@ class ShardedIndex:
     # query engines probe docs_sharded/blocks directly with row-group
     # pruning instead of joining the whole table into the plan
     path: str | None = None
-    # exact Σ doc_len over the corpus (None for a segment build whose avgdl
-    # is overridden): lets a tombstone mask derive the surviving avgdl exactly —
+    # exact Σ doc_len over the corpus (None for an empty corpus): lets a
+    # tombstone mask derive the surviving avgdl exactly —
     # (sum_doc_len − Σ killed doc_len) / surviving count — instead of
     # reconstructing the sum from the rounded stored avgdl
     sum_doc_len: int | None = None
@@ -393,10 +395,10 @@ class ShardedIndex:
 def fieldsig_block_rows(sig_src: DataFrame, with_positions: bool = False) -> DataFrame:
     """Per-shard field-signature pseudo-blocks (functions/fieldsig.py).
 
-    Input: (shard, docno, title, description, content_snippet) — or, fast
-    path, (shard, docno, fieldsig) with the words precomputed by the
-    stage-1 tokenizer (index_build.tokenize_documents) so no extra UDF pass
-    runs here. One row per doc. Output: block rows (one per SIG_CHUNK_DOCS
+    Input: (shard, docno, fieldsig), one row per doc, with the signature
+    words every stage-1 tokenizer emits (index_build.tokenize_documents,
+    tokenize_extracted_documents, text_only's adapters), so no UDF pass
+    runs here. Output: block rows (one per SIG_CHUNK_DOCS
     docs, ``block_no`` = chunk index) per shard with ``term = SIG_TERM``
     holding the docs' 14-uint32 Bloom signatures — ``gaps`` is the standard
     delta-gapped docno stream (first gap absolute, per row), ``tfs`` the
@@ -404,29 +406,15 @@ def fieldsig_block_rows(sig_src: DataFrame, with_positions: bool = False) -> Dat
     merge path's float64-mediated varint re-encode), ``dls``/``fls`` empty.
     Chunking (not one shard-spanning row) keeps the sidecar compatible with
     WAND's phase-1 sub-range cells — see the SIG_CHUNK_DOCS note. The
-    signature words are computed MAP-SIDE (Arrow batch UDF) so the
-    per-shard exchange carries ~64 B/doc, not the ~350 B/doc of field
-    text. Merged segments keep their rows verbatim (operators/merge.py
-    passes pseudo-terms through), so a shard may carry several signature
-    rows beyond the chunking; readers concatenate by docno.
+    signature words are computed MAP-SIDE in stage 1, so the per-shard
+    exchange carries ~64 B/doc, not the ~350 B/doc of field text. Merged
+    segments keep their rows verbatim (operators/merge.py passes
+    pseudo-terms through), so a shard may carry several signature rows
+    beyond the chunking; readers concatenate by docno.
     """
     from searchengine_spark.functions import fieldsig
 
-    if "fieldsig" in sig_src.columns:
-        src = sig_src.select("shard", "docno", F.col("fieldsig").alias("sw"))
-    else:
-        @F.pandas_udf("array<long>")
-        def words_udf(t: pd.Series, d: pd.Series, s: pd.Series) -> pd.Series:
-            sigs = fieldsig.sig_words_batch(
-                t.tolist(), d.tolist(), s.tolist()
-            ).astype(np.int64)
-            return pd.Series(list(sigs.tolist()))
-
-        src = sig_src.select(
-            "shard",
-            "docno",
-            words_udf("title", "description", "content_snippet").alias("sw"),
-        )
+    src = sig_src.select("shard", "docno", F.col("fieldsig").alias("sw"))
     out_cols = _BLOCK_POS_COLS if with_positions else _BLOCK_COLS
     schema = BLOCK_POS_SCHEMA if with_positions else BLOCK_SCHEMA
 
@@ -468,137 +456,6 @@ def fieldsig_block_rows(sig_src: DataFrame, with_positions: bool = False) -> Dat
     return src.groupBy("shard").applyInPandas(build, schema)
 
 
-def build_sharded_index(
-    spark: SparkSession,
-    tables: IndexTables,
-    n_shards: int | None = None,
-    block_size: int = DEFAULT_BLOCK_SIZE,
-    docnos: DataFrame | None = None,
-    shard_size: int | None = None,
-    avgdl: float | None = None,
-) -> ShardedIndex:
-    """Logical index tables → sharded block-compressed physical index.
-
-    ``n_shards=None`` derives the count from the docs-per-shard policy
-    (:func:`derive_n_shards`), so shard task size stays constant as the
-    corpus grows; pass an explicit count to override.
-
-    ``shard_size``/``avgdl`` overrides let a *segment* build share the
-    global docno→shard mapping and corpus avgdl (operators/merge.py): a
-    segment's own n_docs/avgdl must not leak into block layout or
-    block-max metadata, or merged segments would disagree.
-    """
-    stats = tables.stats.collect()[0]
-    n_docs = int(stats["n_docs"])
-    # exact corpus Σdoc_len (tombstone masking's bit-exact avgdl' input) —
-    # only trustworthy when avgdl derives from these same tables; a segment
-    # build overriding avgdl carries CORPUS avgdl but segment-local stats,
-    # so its sum would be the segment's, not the corpus's
-    sum_doc_len = None
-    if avgdl is None and "sum_doc_len" in stats.__fields__:
-        sum_doc_len = (
-            int(stats["sum_doc_len"]) if stats["sum_doc_len"] is not None else None
-        )
-    if avgdl is None:
-        avgdl = float(stats["avgdl"])
-    if n_shards is None:
-        n_shards = derive_n_shards(n_docs)
-    if shard_size is None:
-        shard_size = max(1, math.ceil(n_docs / n_shards))
-
-    owns_docnos = docnos is None
-    if docnos is None:
-        docnos = assign_docnos(spark, tables.doc_stats.select("doc_id"))
-
-    # tf/doc_len are integral under integral field boosts (validated above
-    # the cast by _assert_integral_boosts; the kernel's own integrality
-    # check cannot fire on this path because the cast truncates first) —
-    # ship them through the posting shuffle as int32, not double: 8 fewer
-    # bytes on every one of the ~177 posting rows per doc, the build's
-    # single big exchange. int32 doc_len bounds a single doc at 2^31
-    # weighted tokens (~8 GiB of text), far beyond any real page.
-    _assert_integral_boosts()
-    # boost-bound flags need the doc's lowered metadata next to each posting;
-    # broadcast the (doc_id, 3 lowered fields) dimension when its BYTES stay
-    # broadcast-safe, else let AQE plan the doc_id-keyed join
-    fl_src = tables.docs.select("doc_id", *_lowered_fields())
-    if n_docs <= BROADCAST_LOWERED_MAX_ROWS:
-        fl_src = F.broadcast(fl_src)
-    with_no = (
-        tables.postings.join(docnos, "doc_id")
-        .join(fl_src, "doc_id")
-        .select(
-            (F.col("docno") / shard_size).cast("int").alias("shard"),
-            "term",
-            "docno",
-            F.col("tf").cast("int").alias("tf"),
-            F.col("doc_len").cast("int").alias("doc_len"),
-            _boost_flags_col(
-                F.col("_lt"), F.col("_ld"), F.col("_lc"), F.col("term")
-            ).alias("flags"),
-        )
-    )
-
-    def encode_part(pdf: pd.DataFrame) -> pd.DataFrame:
-        return encode_blocks_pdf(pdf, avgdl, block_size)
-
-    # Group granularity: (shard, term-bucket), NOT (shard, term). One Arrow
-    # group per term would mean |vocab|·n_shards tiny groups — pure
-    # per-group overhead. A bucket carries ~1/TERM_BUCKETS of a shard's
-    # postings (bounded memory); the per-term split happens inside the
-    # kernel via pandas groupby (C-level). Head-term skew is already
-    # neutralized by doc-sharding, so buckets are near-uniform.
-    blocks = with_no.withColumn(
-        "_tb", F.pmod(F.xxhash64("term"), F.lit(TERM_BUCKETS))
-    ).groupBy("shard", "_tb").applyInPandas(
-        lambda pdf: encode_part(pdf.drop(columns=["_tb"])), BLOCK_SCHEMA
-    )
-
-    docs = (
-        tables.docs.join(docnos, "doc_id")
-        .join(tables.doc_stats.select("doc_id", "doc_len"), "doc_id")
-        .select(
-            (F.col("docno") / shard_size).cast("int").alias("shard"),
-            "docno",
-            "doc_id",
-            "url",
-            "title",
-            "description",
-            "content_snippet",
-            "doc_len",
-        )
-    )
-
-    # field-signature sidecar rows ride with the blocks (co-partitioned by
-    # shard; see fieldsig_block_rows) — WAND's emission bounds read them
-    blocks = blocks.unionByName(
-        fieldsig_block_rows(
-            docs.select("shard", "docno", "title", "description", "content_snippet")
-        )
-    )
-
-    index = ShardedIndex(
-        blocks=blocks,
-        docs=docs,
-        term_stats=tables.term_stats,
-        n_docs=n_docs,
-        avgdl=avgdl,
-        n_shards=n_shards,
-        shard_size=shard_size,
-        block_size=block_size,
-        sum_doc_len=sum_doc_len,
-    )
-    # blocks/docs are still LAZY plans over docnos — the cache assign_docnos
-    # made must live until they are materialized. Ownership: only a docnos
-    # frame THIS call created is auto-released by write_sharded_index; a
-    # caller-supplied docnos (the segment/merge pattern — other segment
-    # plans may share it) stays the caller's to release.
-    index._docno_source = (  # type: ignore[attr-defined]
-        getattr(docnos, "_docno_source", None) if owns_docnos else None
-    )
-    return index
-
-
 def build_and_write_sharded(
     spark: SparkSession,
     pages: DataFrame,
@@ -615,8 +472,8 @@ def build_and_write_sharded(
 
     The raw (term, doc_id, tf, doc_len) posting rows are ~10x the bytes of
     the encoded blocks (a 32-char hex doc_id on every posting); at 100 TB
-    writing them out just to re-read, re-shuffle and encode is the dominant
-    cost of the two-step build. Here posting rows exist only inside ONE
+    writing them out just to re-read, re-shuffle and encode would dominate
+    the build. Here posting rows exist only inside ONE
     shuffle (the groupBy(shard, term-bucket) exchange feeding the encode
     kernel):
 
@@ -629,6 +486,10 @@ def build_and_write_sharded(
     4. docs re-derived from ``tokenized`` (cheap column scan); term_stats
        derived from the *written* blocks (Σ n per term == df, since tf rows
        are unique per (doc, term)) — never re-touching posting rows
+
+    Stage 1 lands in ``{path}/tokenized``; stages 2-4 are
+    :func:`shard_and_write_from_tokenized`, reached through the module
+    global, and its writes are :func:`write_sharded_index`'s.
     """
     from searchengine_spark.operators.index_build import tokenize_documents
 
@@ -666,7 +527,10 @@ def shard_and_write_from_tokenized(
 ) -> ShardedIndex:
     """Stages 2-4 of :func:`build_and_write_sharded`, starting from an
     already-tokenized frame (any of the stage-1 tokenizers: web pages,
-    pre-extracted fields, or the text-only documents adapter).
+    pre-extracted fields, or the text-only documents adapter) — the only
+    path from tokens to posting blocks. Plans the lazy index (encoded
+    blocks ∪ field-signature sidecar rows, plus docs), persists it with
+    :func:`write_sharded_index` and returns the opened index.
     ``n_shards=None`` → the docs-per-shard policy (:func:`derive_n_shards`)."""
     st = tokenized.agg(
         F.count("*").alias("n_docs"),
@@ -709,6 +573,12 @@ def shard_and_write_from_tokenized(
         "shard", "docno", "doc_len", *_lowered_fields(),
         F.explode("tf_terms").alias("tw"),
     ).select(*posting_cols)
+    # Group granularity: (shard, term-bucket), NOT (shard, term). One Arrow
+    # group per term would mean |vocab|·n_shards tiny groups — pure
+    # per-group overhead. A bucket carries ~1/TERM_BUCKETS of a shard's
+    # postings (bounded memory); the per-term split happens inside the
+    # kernel. Head-term skew is already neutralized by doc-sharding, so
+    # buckets are near-uniform.
     encoded = (
         exploded.withColumn("_tb", F.pmod(F.xxhash64("term"), F.lit(TERM_BUCKETS)))
         .groupBy("shard", "_tb")
@@ -721,34 +591,36 @@ def shard_and_write_from_tokenized(
     )
     # field-signature sidecar (pseudo-term rows, one per SIG_CHUNK_DOCS
     # docs per shard; see fieldsig_block_rows — readers concatenate a
-    # shard's chunks by docno) unions into the same write. Words come
-    # precomputed from the stage-1 tokenize pass when available (no extra
-    # UDF job); either way the per-shard exchange carries ~64 B/doc
-    sig_cols = (
-        ["shard", "docno", "fieldsig"]
-        if "fieldsig" in tk.columns
-        else ["shard", "docno", "title", "description", "content_snippet"]
+    # shard's chunks by docno) unions into the same write; the words come
+    # precomputed from stage 1, so the per-shard exchange carries ~64 B/doc
+    blocks = encoded.unionByName(
+        fieldsig_block_rows(tk.select("shard", "docno", "fieldsig"), with_positions)
     )
-    sig_rows = fieldsig_block_rows(tk.select(*sig_cols), with_positions)
-    (
-        encoded.unionByName(sig_rows)
-        .sortWithinPartitions("term", "shard", "block_no")
-        .write.mode("overwrite")
-        .parquet(f"{path}/blocks")
+    written = write_sharded_index(
+        ShardedIndex(
+            blocks=blocks,
+            docs=tk.select(*_DOC_COLS),
+            term_stats=_term_stats(blocks, n_docs),
+            n_docs=n_docs,
+            avgdl=avgdl,
+            n_shards=n_shards,
+            shard_size=shard_size,
+            block_size=block_size,
+            with_positions=with_positions,
+            sum_doc_len=sum_doc_len,
+        ),
+        path,
     )
+    release_docnos(docnos_src)  # blocks+docs are written; the cache is dead weight
+    return written
 
-    (
-        tk.select(*_DOC_COLS)
-        .repartition(n_shards, "shard")
-        .sortWithinPartitions("shard", "docno")
-        .write.mode("overwrite")
-        .parquet(f"{path}/docs_sharded")
-    )
 
-    blocks = spark.read.parquet(f"{path}/blocks")
-    (
-        # "\x00"-prefixed pseudo-terms (field-signature sidecar rows) are
-        # not postings — they must not surface as vocabulary terms
+def _term_stats(blocks: DataFrame, n_docs: int) -> DataFrame:
+    """(term, df, idf) from posting blocks: Σ n per term == df, since a
+    (doc, term) posting is unique. "\\x00"-prefixed pseudo-terms
+    (field-signature sidecar rows) are not postings — they must not surface
+    as vocabulary terms."""
+    return (
         blocks.filter(~F.col("term").startswith("\x00"))
         .groupBy("term")
         .agg(F.sum("n").cast("long").alias("df"))
@@ -760,17 +632,7 @@ def shard_and_write_from_tokenized(
                 F.log((F.lit(float(n_docs)) - F.col("df") + 0.5) / (F.col("df") + 0.5)),
             ).alias("idf"),
         )
-        .write.mode("overwrite")
-        .parquet(f"{path}/term_stats")
     )
-
-    release_docnos(docnos_src)  # blocks+docs are written; the cache is dead weight
-    _write_meta(
-        path, n_docs=n_docs, avgdl=avgdl, sum_doc_len=sum_doc_len,
-        n_shards=n_shards, shard_size=shard_size, block_size=block_size,
-        with_positions=with_positions,
-    )
-    return read_sharded_index(spark, path)
 
 
 def _write_meta(path: str, **meta) -> None:
@@ -780,12 +642,19 @@ def _write_meta(path: str, **meta) -> None:
         json.dump({k: meta[k] for k in _META_KEYS}, f)
 
 
-def write_sharded_index(index: ShardedIndex, path: str) -> None:
-    """Persist: blocks/docs repartitioned by shard, term-sorted within files
-    so the query-time term IN-list prunes parquet row groups."""
+def write_sharded_index(index: ShardedIndex, path: str) -> ShardedIndex:
+    """The only writer of a sharded index (the build and compaction both
+    end here); returns the opened index.
+
+    Blocks are term-sorted within files, so the query-time term IN-list
+    prunes parquet row groups; docs are repartitioned by shard and
+    docno-sorted for the phase-2 row-group probe. ``index.term_stats`` is
+    not written: term_stats derive from the WRITTEN blocks, so a lazy
+    ``index.blocks`` plan (the build's encode, a compaction's rewrite) runs
+    exactly once."""
+    spark = index.blocks.sparkSession
     (
-        index.blocks.repartition(index.n_shards, "shard")
-        .sortWithinPartitions("shard", "term", "block_no")
+        index.blocks.sortWithinPartitions("term", "shard", "block_no")
         .write.mode("overwrite")
         .parquet(f"{path}/blocks")
     )
@@ -795,11 +664,11 @@ def write_sharded_index(index: ShardedIndex, path: str) -> None:
         .write.mode("overwrite")
         .parquet(f"{path}/docs_sharded")
     )
-    index.term_stats.write.mode("overwrite").parquet(f"{path}/term_stats")
-    # releases only a docnos cache build_sharded_index itself created
-    # (caller-supplied docnos may back other live segment plans)
-    release_docnos(index)
+    _term_stats(spark.read.parquet(f"{path}/blocks"), index.n_docs).write.mode(
+        "overwrite"
+    ).parquet(f"{path}/term_stats")
     _write_meta(path, **{k: getattr(index, k) for k in _META_KEYS})
+    return read_sharded_index(spark, path)
 
 
 def read_sharded_index(spark: SparkSession, path: str) -> ShardedIndex:
@@ -927,8 +796,9 @@ def term_skew_report(index: ShardedIndex, top_n: int = 20) -> DataFrame:
 
 
 def export_index(spark: SparkSession, index: ShardedIndex) -> "IndexTables":
-    """Inverse of :func:`build_sharded_index` (the CLI's ``optimize``):
-    compressed sharded blocks → the logical ``IndexTables`` layout.
+    """Compressed sharded blocks → the logical ``IndexTables`` layout (the
+    CLI's ``export``; the exhaustive engine and the DuckDB-checkable entry
+    queries read that layout).
 
     Layout conversion never re-tokenizes. The blocks already carry every
     posting (term, docno, tf, doc_len) and ``docs_sharded`` carries doc

@@ -2115,19 +2115,27 @@ def q_bm25_merged_topk(spark, sf_dir) -> DataFrame:
 MASKED_DELETE_PRED = "CAST(doc_id AS BIGINT) % 2 = 0"
 
 
-def _sharded_index_and_dead_set(spark, sf_dir):
-    """Shared setup for the two delete-path oracle rows (mask vs rewrite):
-    one sharded compressed index over the text-only corpus plus the
-    even-doc_id dead set (the SQL mirror of MASKED_DELETE_PRED).  Both
-    rows MUST build from identical inputs — they share one DuckDB twin
-    (SQL_WAND_MASKED_TOPK), so any drift here would desynchronize them."""
+def _stemmed_sharded_index(spark, sf_dir, name):
+    """The text-only corpus, Porter-stemmed (tokenize_text_documents — the
+    tokenizer q_bm25_stemmed_topk's logical index uses), built by the one
+    sharded build into the scratch dir ``name`` with 8 shards."""
     from searchengine_spark.operators import shards
-    from searchengine_spark.plans.text_only import build_text_only_index
+    from searchengine_spark.plans.text_only import tokenize_text_documents
 
-    tables = build_text_only_index(spark, _documents(spark, sf_dir))
-    for name in ("docs", "postings", "doc_stats", "term_stats", "stats"):
-        setattr(tables, name, getattr(tables, name).cache())
-    sharded = shards.build_sharded_index(spark, tables, n_shards=8)
+    tokenized = tokenize_text_documents(_documents(spark, sf_dir))
+    return shards.shard_and_write_from_tokenized(
+        spark, tokenized, _scratch_dir(sf_dir, name), n_shards=8
+    )
+
+
+def _sharded_index_and_dead_set(spark, sf_dir, name):
+    """Shared setup for the two delete-path oracle rows (mask vs rewrite):
+    one sharded compressed index over the text-only corpus, written to the
+    row's own scratch dir ``name``, plus the even-doc_id dead set (the SQL
+    mirror of MASKED_DELETE_PRED).  Both rows MUST build from identical
+    inputs — they share one DuckDB twin (SQL_WAND_MASKED_TOPK), so any
+    drift here would desynchronize them."""
+    sharded = _stemmed_sharded_index(spark, sf_dir, name)
     dead = (
         _documents(spark, sf_dir)
         .filter(F.col("doc_id") % 2 == 0)
@@ -2146,7 +2154,7 @@ def q_wand_masked_topk(spark, sf_dir) -> DataFrame:
     from searchengine_spark.operators import tombstones
     from searchengine_spark.plans.wand import WandSearchEngine
 
-    sharded, dead = _sharded_index_and_dead_set(spark, sf_dir)
+    sharded, dead = _sharded_index_and_dead_set(spark, sf_dir, "wand_masked")
     mask = tombstones.build_mask(spark, sharded, dead)
     engine = WandSearchEngine(spark, sharded, mask=mask)
     res = engine.search_batch([(0, STEMMED_QUERY)], top_k=10, with_metadata=False)
@@ -2178,7 +2186,7 @@ def q_wand_compacted_topk(spark, sf_dir) -> DataFrame:
     from searchengine_spark.operators import merge
     from searchengine_spark.plans.wand import WandSearchEngine
 
-    sharded, dead = _sharded_index_and_dead_set(spark, sf_dir)
+    sharded, dead = _sharded_index_and_dead_set(spark, sf_dir, "wand_compacted")
     compacted = merge.apply_tombstones(spark, sharded, dead)
     engine = WandSearchEngine(spark, compacted)
     res = engine.search_batch([(0, STEMMED_QUERY)], top_k=10, with_metadata=False)
@@ -2204,14 +2212,9 @@ def q_wand_stemmed_topk(spark, sf_dir) -> DataFrame:
     index + block-max WAND path (plans/wand.py); rank/score-identity of the
     two paths is property-tested in tests/test_wand.py, and the same
     stemmed-table DuckDB oracle checks both."""
-    from searchengine_spark.operators import shards
-    from searchengine_spark.plans.text_only import build_text_only_index
     from searchengine_spark.plans.wand import WandSearchEngine
 
-    tables = build_text_only_index(spark, _documents(spark, sf_dir))
-    for name in ("docs", "postings", "doc_stats", "term_stats", "stats"):
-        setattr(tables, name, getattr(tables, name).cache())
-    sharded = shards.build_sharded_index(spark, tables, n_shards=8)
+    sharded = _stemmed_sharded_index(spark, sf_dir, "wand_stemmed")
     engine = WandSearchEngine(spark, sharded)
     res = engine.search_batch([(0, STEMMED_QUERY)], top_k=10, with_metadata=False)
     return res.select("rank", "doc_id", F.round("score", 6).alias("score"))
@@ -2225,14 +2228,9 @@ def q_wand_subsplit_topk(spark, sf_dir) -> DataFrame:
     under the driver's DuckDB hash gate regardless of the driver host's
     core count. Exact top-k must be unchanged: the twin is the SAME
     stemmed-table oracle as wand_stemmed_topk."""
-    from searchengine_spark.operators import shards
-    from searchengine_spark.plans.text_only import build_text_only_index
     from searchengine_spark.plans.wand import WandSearchEngine
 
-    tables = build_text_only_index(spark, _documents(spark, sf_dir))
-    for name in ("docs", "postings", "doc_stats", "term_stats", "stats"):
-        setattr(tables, name, getattr(tables, name).cache())
-    sharded = shards.build_sharded_index(spark, tables, n_shards=8)
+    sharded = _stemmed_sharded_index(spark, sf_dir, "wand_subsplit")
     engine = WandSearchEngine(spark, sharded, sub_split=3)
     res = engine.search_batch([(0, STEMMED_QUERY)], top_k=10, with_metadata=False)
     return res.select("rank", "doc_id", F.round("score", 6).alias("score"))

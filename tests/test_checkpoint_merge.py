@@ -114,26 +114,21 @@ def _decoded(blocks_df) -> pd.DataFrame:
 
 
 @pytest.fixture(scope="module")
-def block_segments(spark, full_and_segments):
-    full, segs = full_and_segments
-    docnos = shards.assign_docnos(spark, full.doc_stats.select("doc_id")).cache()
-    stats = full.stats.collect()[0]
-    import math as m
+def block_segments(spark, pages, tmp_path_factory):
+    """The global index (8 shards, block size 16) from the one sharded
+    build, and its posting-block rows split into 3 segments by
+    pmod(xxhash64(term, block_no), 3) — disjoint block sets in one shared
+    docno space, the shape segment merge consumes."""
+    from pyspark.sql import functions as F
 
-    shard_size = max(1, m.ceil(int(stats["n_docs"]) / 8))
-    avgdl = float(stats["avgdl"])
-    seg_blocks = [
-        shards.build_sharded_index(
-            spark, s, n_shards=8, block_size=16, docnos=docnos,
-            shard_size=shard_size, avgdl=avgdl,
-        ).blocks.cache()
-        for s in segs
-    ]
-    global_idx = shards.build_sharded_index(
-        spark, full, n_shards=8, block_size=16, docnos=docnos,
-        shard_size=shard_size, avgdl=avgdl,
+    global_idx = shards.shard_and_write_from_tokenized(
+        spark, index_build.tokenize_documents(pages),
+        str(tmp_path_factory.mktemp("global")), n_shards=8, block_size=16,
     )
-    return global_idx, seg_blocks, avgdl
+    blocks = global_idx.blocks.cache()
+    seg_of = F.pmod(F.xxhash64("term", "block_no"), F.lit(3))
+    seg_blocks = [blocks.filter(seg_of == i) for i in range(3)]
+    return global_idx, seg_blocks, global_idx.avgdl
 
 
 def test_block_merge_equals_direct_build(spark, block_segments):

@@ -32,9 +32,9 @@ def corpora(spark, tmp_path_factory):
     tomb_ids = full.docs.join(
         fresh.docs.select("doc_id"), "doc_id", "left_anti"
     ).select("doc_id")
-    # out_path covers the single-execution write path + read-back
-    compacted = merge.apply_tombstones(
-        spark, full, tomb_ids, out_path=str(base / "compacted")
+    # the written compaction (rewrite runs once) + read-back
+    compacted = shards.write_sharded_index(
+        merge.apply_tombstones(spark, full, tomb_ids), str(base / "compacted")
     )
     return full, fresh, compacted, tomb_ids
 
@@ -267,8 +267,8 @@ def test_interleaved_dirty_clean_blocks_stay_nonoverlapping(spark, tmp_path_fact
     assert len(tb) >= 3, "fixture must yield a >=3-block term"
     k1, k2 = int(tb.iloc[0]["min_docno"]), int(tb.iloc[-1]["max_docno"])
     tomb_ids = full.docs.filter(F.col("docno").isin([k1, k2])).select("doc_id")
-    compacted = merge.apply_tombstones(
-        spark, full, tomb_ids, out_path=str(base / "compacted")
+    compacted = shards.write_sharded_index(
+        merge.apply_tombstones(spark, full, tomb_ids), str(base / "compacted")
     )
     out = compacted.blocks.toPandas()
     out = out[~out["term"].str.startswith("\x00")]

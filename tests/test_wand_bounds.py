@@ -43,10 +43,21 @@ def _page(url: str, title: str, desc: str, body: str) -> dict:
     }
 
 
-def _rank_identity(spark, pages: list[dict], queries: list[tuple[int, str]], k: int):
+def _build_both(spark, pages_df, path: str, block_size: int):
+    """(logical tables, one-shard sharded index) over one stage-1 frame."""
+    tokenized = index_build.tokenize_documents(pages_df).cache()
+    tables = index_build.build_index_tables(tokenized)
+    sharded = shards.shard_and_write_from_tokenized(
+        spark, tokenized, path, n_shards=1, block_size=block_size
+    )
+    return tables, sharded
+
+
+def _rank_identity(
+    spark, path, pages: list[dict], queries: list[tuple[int, str]], k: int
+):
     pdf = pd.DataFrame(pages, columns=["url", "warc_ts", "html", "text", "lang"])
-    tables = index_build.build_index(spark.createDataFrame(pdf))
-    sharded = shards.build_sharded_index(spark, tables, n_shards=1, block_size=8)
+    tables, sharded = _build_both(spark, spark.createDataFrame(pdf), str(path), 8)
     want = BM25SearchEngine(spark, tables).search_batch(queries, top_k=k)
     got = WandSearchEngine(spark, sharded).search_batch(queries, top_k=k)
     cols = ["query_id", "rank", "doc_id", "score"]
@@ -58,7 +69,7 @@ def _rank_identity(spark, pages: list[dict], queries: list[tuple[int, str]], k: 
     return w
 
 
-def test_stem_not_substring_phrase_kept(spark):
+def test_stem_not_substring_phrase_kept(spark, tmp_path):
     # "happily" stems to something that is not a substring of the query
     assert textproc.tokenize("happily") != ["happily"]
     # filler keeps idf positive (no query term) while the 4 matchers give
@@ -93,11 +104,11 @@ def test_stem_not_substring_phrase_kept(spark):
         _page("https://c.example/c", "more notes", "", "happily strolling home"),
         _page("https://e.example/e", "other notes", "", "she hummed happily twice happily"),
     ]
-    res = _rank_identity(spark, pages, [(0, "happily")], k=2)
+    res = _rank_identity(spark, tmp_path, pages, [(0, "happily")], k=2)
     assert len(res) == 2  # the query genuinely returns results
 
 
-def test_exclusive_chain_desc_phrase(spark):
+def test_exclusive_chain_desc_phrase(spark, tmp_path):
     # stems here ARE query substrings, so the title CAN be ruled out per
     # doc; the bound must then still allow the description phrase (1.5)
     q = "quantum garden"
@@ -128,11 +139,11 @@ def test_exclusive_chain_desc_phrase(spark):
         _page("https://v.example/v", "notes two", "", "garden filler quantum text"),
         _page("https://w.example/w", "notes three", "", "a quantum garden appears"),
     ]
-    res = _rank_identity(spark, pages, [(0, q)], k=3)
+    res = _rank_identity(spark, tmp_path, pages, [(0, q)], k=3)
     assert len(res) == 3
 
 
-def test_free_token_cross_boundary_substring_kept(spark):
+def test_free_token_cross_boundary_substring_kept(spark, tmp_path):
     # "smartly" stems to a token with no postings for most docs, and the
     # boost chain tests SUBSTRING containment: "smart" ⊂ "smartest ideas"
     # crosses no token boundary but "art" ⊂ "smartest" does. The Bloom
@@ -164,18 +175,17 @@ def test_free_token_cross_boundary_substring_kept(spark):
         _page("https://b.example/y", "other page", "", "nivu nivu text body"),
         _page("https://c.example/z", "more words", "", "nivu something else"),
     ]
-    res = _rank_identity(spark, pages, [(0, q)], k=2)
+    res = _rank_identity(spark, tmp_path, pages, [(0, q)], k=2)
     assert len(res) == 2
 
 
-def test_emission_bounds_match_on_reference_queries(spark):
+def test_emission_bounds_match_on_reference_queries(spark, tmp_path):
     # broader randomized-ish sweep: the generated corpus at tiny k with one
     # shard maximizes emission pressure (su.size >> k) across 21 queries
     from searchengine_spark.sources import webgen
 
     pdf = webgen.generate_pandas(200)
-    tables = index_build.build_index(spark.createDataFrame(pdf))
-    sharded = shards.build_sharded_index(spark, tables, n_shards=1, block_size=16)
+    tables, sharded = _build_both(spark, spark.createDataFrame(pdf), str(tmp_path), 16)
     queries = webgen.reference_queries()
     want = BM25SearchEngine(spark, tables).search_batch(queries, top_k=3)
     got = WandSearchEngine(spark, sharded).search_batch(queries, top_k=3)
